@@ -104,22 +104,35 @@ object Pipeline {
 
   /** Quarantine predicate shared by both fact flows (reference Pydantic
     * gate, config.py:79-108). */
-  private def validRow: Column =
+  private[graft] def validRow: Column =
     col("quarter_date").isNotNull && Quality.labelValid(col("quarter_label")) &&
       Quality.tickerValid(col("ticker"))
 
+  /** Last-write-wins precedence of each fact flow. It covers every
+    * non-key column: rows tying on ALL of them are identical, so the pick
+    * is deterministic even for exact-duplicate batches. */
+  private[graft] val IncomePrecedence: Seq[Column] =
+    Seq(col("revenue").desc_nulls_last, col("eps").desc_nulls_last,
+      col("gross_profit").desc_nulls_last, col("quarter_label").asc)
+  private val EstimatePrecedence: Seq[Column] =
+    Seq(col("estimated_revenue").desc_nulls_last, col("estimated_eps").desc_nulls_last,
+      col("analyst_count").desc_nulls_last, col("quarter_label").asc)
+
   /** Merge a clean batch into the Parquet state table on the natural key
-    * (last-write-wins, deterministic intra-batch winner). */
+    * (last-write-wins, deterministic intra-batch winner) in one window
+    * over one exchange: incoming rows rank above the stored row, and
+    * `precedence` picks among incoming rows (stored keys are unique, so
+    * ranking them by it too changes nothing). */
   private def mergeToState(spark: SparkSession, clean: DataFrame, statePath: String,
                            precedence: Seq[Column]): DataFrame = {
-    val keys = Seq("ticker", "quarter_date")
-    val deduped = Merge.lastWriteWins(clean, keys, precedence)
     // Missing path = first run; any OTHER read failure rethrows (an empty
-    // bootstrap on a transient error would overwrite real state).
-    val current = Merge.readStateOrEmpty(spark, statePath, deduped.schema)
-    val merged = Merge.mergeUpsert(current, deduped, keys)
+    // bootstrap on a transient error would overwrite real state). The
+    // schema is inferred here on purpose: it is the schema-drift check.
+    val current = Merge.readStateOrEmpty(spark, statePath, clean.schema)
+    val merged = Merge.mergeUpsert(current, clean, Seq("ticker", "quarter_date"), precedence)
     Sinks.atomicSwapWrite(spark, merged, statePath)
-    spark.read.parquet(statePath)
+    // The schema just written; re-inferring it would cost a footer job.
+    spark.read.schema(merged.schema).parquet(statePath)
   }
 
   /** Run the full income pipeline: normalize bronze, quarantine invalid
@@ -129,18 +142,14 @@ object Pipeline {
   def run(spark: SparkSession, bronzeIncomeDir: String, statePath: String): (DataFrame, DataFrame) = {
     val bronze = spark.read.schema(Schemas.fmpIncome).json(bronzeIncomeDir)
     val (clean, bad) = Quality.quarantine(normalizeIncome(bronze), validRow)
-    // Precedence covers every non-key column: rows tying on ALL of them
-    // are identical, so the last-write-wins pick is deterministic even
-    // for exact-duplicate batches.
-    (mergeToState(spark, clean, statePath,
-      Seq(col("revenue").desc_nulls_last, col("eps").desc_nulls_last,
-        col("gross_profit").desc_nulls_last, col("quarter_label").asc)), bad)
+    (mergeToState(spark, clean, statePath, IncomePrecedence), bad)
   }
 
   /** Full reference flow through the custom DataSourceV2 source
     * (reference main.py:38-75 with extract.py's per-symbol GET as the
-    * extract stage): [[graft.sources.FmpSource]] plans one partition per
-    * symbol and prunes fetches for symbols Spark filters away, then the
+    * extract stage): [[graft.sources.FmpSource]] packs the symbols into
+    * at most leaf-parallelism partitions, each fetching its symbols one
+    * by one, and prunes fetches for symbols Spark filters away, then the
     * same normalize -> quarantine -> merge plan as [[run]]. The ONLY
     * difference from [[run]] is the source node — the operator layer is
     * source-agnostic, which is the point of the connector API.
@@ -152,9 +161,7 @@ object Pipeline {
       .option("symbols", symbols.mkString(","))
       .option("dataset", "income").load()
     val (clean, bad) = Quality.quarantine(normalizeIncome(bronze), validRow)
-    (mergeToState(spark, clean, statePath,
-      Seq(col("revenue").desc_nulls_last, col("eps").desc_nulls_last,
-        col("gross_profit").desc_nulls_last, col("quarter_label").asc)), bad)
+    (mergeToState(spark, clean, statePath, IncomePrecedence), bad)
   }
 
   /** Run the analyst-estimates flow (reference S3+S11, load.py:163-200):
@@ -164,8 +171,6 @@ object Pipeline {
                    statePath: String): (DataFrame, DataFrame) = {
     val bronze = spark.read.schema(Schemas.fmpEstimates).json(bronzeEstimatesDir)
     val (clean, bad) = Quality.quarantine(normalizeEstimates(bronze), validRow)
-    (mergeToState(spark, clean, statePath,
-      Seq(col("estimated_revenue").desc_nulls_last, col("estimated_eps").desc_nulls_last,
-        col("analyst_count").desc_nulls_last, col("quarter_label").asc)), bad)
+    (mergeToState(spark, clean, statePath, EstimatePrecedence), bad)
   }
 }

@@ -540,9 +540,14 @@ private[graft] object QueriesCore {
         round(col("exact_med"), 6).as("exact_med"))
     }),
 
-    // The composed training-data cleaning flow (text/CorpusPipeline):
-    // language filter -> quality filter -> exact-dedup keeper ->
-    // near-dup keeper, one lazy plan.
+    // ---- S1: per-symbol REST extract as a real DataSourceV2 ---------------
+    // graft.sources.FmpSource: the un-pruned symbols packed in order into
+    // at most leaf-parallelism input partitions, required-column pruning
+    // into the record parser, symbol predicates consumed before packing
+    // (the TK4 fetch below never happens). This gate uses the file
+    // transport: the staged JSONL per sym_part directory stands in for
+    // the HTTP body; source_http_live below drives the same read over a
+    // real socket.
     "source_http_dsv2" -> ((s, dir) => {
       val root = graft.util.Scratch.dir("graft_fmp_api")
       incomeBronzeFixture(s, dir, badDates = false)
@@ -560,8 +565,8 @@ private[graft] object QueriesCore {
     // The same extract through a REAL socket: a loopback JDK HttpServer
     // serves the staged JSONL as JSON arrays, the source issues one GET
     // per un-pruned symbol from the executors, and the server 500s the
-    // FIRST request to every path — so each partition's first attempt
-    // fails and the reader's retry recovers it. Materialized while the
+    // FIRST request to every path — so each symbol's first GET fails and
+    // the reader's per-symbol retry recovers it. Materialized while the
     // server is up (the gate returns a read-back, not a lazy plan over a
     // stopped socket); same oracle as the file transport.
     "source_http_live" -> ((s, dir) => {

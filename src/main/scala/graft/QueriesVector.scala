@@ -242,12 +242,6 @@ private[graft] object QueriesVector {
           |FROM embeddings_v WHERE vec_id < 100""".stripMargin)
     }),
 
-    // ---- S1: per-symbol REST extract as a real DataSourceV2 ---------------
-    // graft.sources.FmpSource: one input partition per symbol, required-
-    // column pruning into the record parser, symbol predicates consumed as
-    // partition pruning (the TK4 fetch below never happens). Transport is
-    // file-backed (no egress in this container); the staged JSONL per
-    // sym_part directory is the fixture standing in for the HTTP body.
     // L2 normalization (the standard pre-ANN projection: unit vectors
     // make cosine a plain dot). Norm computed once per row in its own
     // projection — inlined in the per-element lambda it would re-run the

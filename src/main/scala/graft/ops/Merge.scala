@@ -40,18 +40,6 @@ object Merge {
     lastWriteWins(tagged, keys, col("_src").desc +: precedence).drop("_src")
   }
 
-  /** Partition-scoped MERGE into a hive-partitioned Parquet state table:
-    * only partitions PRESENT IN THE BATCH are read (partition-pruned
-    * scan), merged, and rewritten (dynamic partition overwrite) — merge
-    * cost is proportional to touched partitions, not table size. The
-    * full-table swap ([[graft.io.Sinks.atomicSwapWrite]]) is the fallback
-    * for unpartitioned state; THIS is the form that holds at 100 TB,
-    * where a daily batch touches a handful of date partitions.
-    *
-    * `partitionCol` must be part of every row (it need not be part of
-    * `keys`, but keys must not straddle partitions — the natural key
-    * determines the partition in a sane layout).
-    */
   /** Read an existing state table, or an empty frame ONLY when the path
     * genuinely does not exist (first run). Every other failure —
     * permissions, transient FS error, corrupt footer — rethrows: treating
@@ -67,7 +55,15 @@ object Merge {
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     }
 
-  /** `incomingWins = true` (default) is the reference's upsert contract:
+  /** Partition-scoped MERGE into a hive-partitioned Parquet state table:
+    * only partitions PRESENT IN THE BATCH are read (partition-pruned
+    * scan), merged, and rewritten (dynamic partition overwrite) — merge
+    * cost is proportional to touched partitions, not table size. The
+    * full-table swap ([[graft.io.Sinks.atomicSwapWrite]]) is the fallback
+    * for unpartitioned state; THIS is the form that holds at 100 TB,
+    * where a daily batch touches a handful of date partitions.
+    *
+    * `incomingWins = true` (default) is the reference's upsert contract:
     * a batch row replaces the stored row for its key outright, with
     * `precedence` breaking ties only WITHIN the batch. `false` ranks
     * state and batch rows together under `precedence` alone — the

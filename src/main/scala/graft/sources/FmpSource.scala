@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -24,14 +25,22 @@ import graft.model.Schemas
   * on the PUBLIC connector API: `TableProvider` -> `ScanBuilder` ->
   * `Batch` -> `PartitionReader`.
   *
-  * Scale shape: ONE input partition PER SYMBOL — each fetch is
-  * independent, so a thousand-symbol extract fans out across the cluster
-  * with no driver bottleneck, and Spark's retry machinery re-fetches a
-  * failed symbol alone. Pushdown is real: required-column pruning reaches
-  * the record parser (unrequested fields are never materialized), and
-  * `symbol = 'X'` / `symbol IN (...)` predicates prune whole partitions
-  * (the fetch for a filtered-out symbol never happens — the source-level
-  * twin of parquet partition pruning).
+  * Scale shape: the symbols left after pruning are packed, in symbol
+  * order, into contiguous groups — at most one per leaf-node default
+  * parallelism slot (`spark.sql.leafNodeDefaultParallelism`, else the
+  * context's default parallelism, the default Spark's own leaf scans
+  * use), and each partition fetches its group one symbol after another.
+  * That is the HTTP counterpart of a file source packing small files
+  * into one split: a symbol is a few KB of JSON, so a task per symbol
+  * costs more in scheduling than in fetching, while fetch concurrency
+  * still equals the executor slot count. Retry trade-off: the source
+  * retries per symbol (below), but a task that still fails is re-run
+  * by Spark as a whole and re-fetches its whole group. Pushdown is real:
+  * required-column pruning reaches the record parser (unrequested
+  * fields are never materialized), and `symbol = 'X'` /
+  * `symbol IN (...)` predicates drop symbols before packing (the fetch
+  * for a filtered-out symbol never happens — the source-level twin of
+  * parquet partition pruning).
   *
   * Transport is pluggable and BOTH transports are real:
   *
@@ -39,13 +48,13 @@ import graft.model.Schemas
   *    part files under `{root}/{endpoint}/sym_part=S/`, exactly what
   *    `df.write.partitionBy("sym_part").json(...)` stages.
   *  - `url` option — HTTP: one `GET {url}/{endpoint}/{symbol}` per
-  *    partition from the executor that owns it (the reference's exact
-  *    shape, extract.py:69-95), expecting a JSON array back; empty array
-  *    = symbol with no data (extract.py:88-92); 5xx responses retried
-  *    with backoff before failing the task (and Spark's task retry
-  *    re-fetches the one failed symbol on top). Exercised against a
-  *    loopback [[LoopbackApiServer]] in-container (no egress), and
-  *    pointable at any real endpoint outside.
+  *    symbol from the executor that owns its partition (the reference's
+  *    exact shape, extract.py:69-95), expecting a JSON array back; empty
+  *    array = symbol with no data (extract.py:88-92); 429 and 5xx
+  *    responses retried with backoff before failing the task (and
+  *    Spark's task retry re-fetches the failed task's group on top).
+  *    Exercised against a loopback [[LoopbackApiServer]] (no egress
+  *    needed), and pointable at any real endpoint.
   *
   * Every other layer (planning, pruning, parsing, row building) is
   * transport-independent.
@@ -137,14 +146,24 @@ final class FmpScan(requiredSchema: StructType, opts: Map[String, String],
       case (None, None) =>
         throw new IllegalArgumentException("FmpSource requires option 'root' or 'url'")
     }
-    symbols.filter(s => symbolKeep.forall(_.contains(s)))
-      .map(s => FmpPartition(s, locate(s)): InputPartition)
+    val kept = symbols.filter(s => symbolKeep.forall(_.contains(s)))
+    val session = SparkSession.active
+    val slots = session.conf.getOption("spark.sql.leafNodeDefaultParallelism")
+      .map(_.toInt).getOrElse(session.sparkContext.defaultParallelism)
+    val groups = math.min(kept.length, slots)
+    // Contiguous, near-equal groups: group i holds kept[i*n/g, (i+1)*n/g).
+    Array.tabulate[InputPartition](groups) { i =>
+      val group = kept.slice(i * kept.length / groups, (i + 1) * kept.length / groups).toSeq
+      FmpPartition(group, group.map(locate))
+    }
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new FmpReaderFactory(requiredSchema.fieldNames)
 }
 
-final case class FmpPartition(symbol: String, location: String) extends InputPartition
+/** One task's fetch list: `symbols(i)` is read from `locations(i)`. */
+final case class FmpPartition(symbols: Seq[String], locations: Seq[String])
+    extends InputPartition
 
 final class FmpReaderFactory(fields: Array[String]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
@@ -154,7 +173,10 @@ final class FmpReaderFactory(fields: Array[String]) extends PartitionReaderFacto
 final class FmpPartitionReader(partition: FmpPartition, fields: Array[String])
     extends PartitionReader[InternalRow] {
   private val mapper = new ObjectMapper()
-  private val records = FmpPartitionReader.records(partition.location, mapper)
+  // One symbol at a time: the next symbol's fetch starts only once the
+  // previous symbol's records are consumed.
+  private val records =
+    partition.locations.iterator.flatMap(FmpPartitionReader.records(_, mapper))
   private var current: InternalRow = _
 
   override def next(): Boolean = {
@@ -211,8 +233,8 @@ object FmpPartitionReader {
     * 429's `Retry-After: <seconds>` header, when present and within the
     * cap, overrides the backoff (an HTTP-date Retry-After is ignored —
     * the linear backoff applies). A task-level failure after the
-    * retries still gets Spark's own task retry, which re-fetches this
-    * one symbol alone.
+    * retries still gets Spark's own task retry, which re-fetches the
+    * task's whole symbol group.
     */
   private def httpRecords(url: String, mapper: ObjectMapper,
                           maxAttempts: Int = 3): Iterator[JsonNode] = {

@@ -50,9 +50,9 @@ final class LoopbackApiServer(root: String, failFirst: Boolean = false,
         case e: Exception => respond(x, 500, e.toString)
       } finally x.close()
   })
-  // A small pool: partitions fetch concurrently (one per symbol), and a
-  // single-threaded server would serialize the fan-out the source exists
-  // to provide. DAEMON threads, explicitly shut down in stop(): the
+  // A small pool: partitions fetch concurrently (each task its own
+  // symbol group), and a single-threaded server would serialize the
+  // fan-out the source exists to provide. DAEMON threads, explicitly shut down in stop(): the
   // default factory's non-daemon workers would keep the whole JVM alive
   // after main returns.
   private val pool = java.util.concurrent.Executors.newFixedThreadPool(8,

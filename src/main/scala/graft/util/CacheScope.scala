@@ -2,6 +2,8 @@ package graft.util
 
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** Tracks persisted intermediates so composed pipelines can release them
   * deterministically. The dedup/corpus flows persist multiply-referenced
@@ -31,26 +33,22 @@ final class CacheScope {
     p
   }
 
-  /** [[CacheScope.truncate]] with tracked release: the checkpointed
-    * blocks are found by diffing `getPersistentRDDs` around the cut (the
-    * checkpointed RDD is internal to the returned Dataset, so there is
-    * no public handle) and unpersisted by [[close]] like any tracked
-    * persist. The diff assumes no CONCURRENT persists from other threads
-    * of the same SparkContext race this call — true for the micro-batch
-    * sink folds this exists for (one foreachBatch body at a time) and
-    * for the single-threaded query registries; a multi-tenant session
-    * should use untracked [[CacheScope.truncate]] + ContextCleaner
-    * instead. After close() a truncated frame is NOT recomputable
-    * (lineage is cut) — callers must be done with it, the same contract
-    * Bench's between-rep cleanup already imposes.
+  /** [[CacheScope.truncate]] with tracked release: the scope claims the
+    * RDD the cut itself persisted — the one under the returned frame's
+    * `LogicalRDD` (there is no public handle to it) — and [[close]]
+    * unpersists it like any tracked persist. Caches that merely
+    * MATERIALIZE during the cut (an outer scope's lazy persist feeding
+    * `df`) are not claimed: they belong to whoever persisted them. After
+    * close() a truncated frame is NOT recomputable (lineage is cut) —
+    * callers must be done with it, the same contract Bench's between-rep
+    * cleanup already imposes.
     */
   def truncate(df: DataFrame): DataFrame = synchronized {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
     val c = CacheScope.truncate(df)
-    val added = sc.getPersistentRDDs -- before
-    if (added.nonEmpty) rdds ++= added.values
-    else frames += c // persist-fallback path (noPlanCut): track the frame
+    c.queryExecution.logical match {
+      case r: LogicalRDD if c.storageLevel == StorageLevel.NONE => rdds += r.rdd
+      case _ => frames += c // persist-fallback path (noPlanCut): track the frame
+    }
     c
   }
 

@@ -10,7 +10,8 @@ import graft.model.Schemas
   * plus merge idempotence and the CSV export/re-ingest round trip
   * (load.py:202-227).
   */
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   // FIXTURES.md §1 golden rows + edge variants (test_edge_cases.py:131-206).
@@ -21,12 +22,13 @@ class PipelineSpec extends SparkSpec {
     """{"date": "invalid-date", "symbol": "LCID", "revenue": 800000000, "eps": -0.30, "grossProfit": 100000000}""",
     """{"date": "2025-06-30", "symbol": "BADTICKER99X", "revenue": "N/A", "eps": "null", "grossProfit": "TBD"}""")
 
-  private def writeBronze(): String = {
+  private def writeBatch(lines: Seq[String]): String = {
     val dir = Files.createTempDirectory("graft_bronze").toString
-    Files.write(java.nio.file.Paths.get(dir, "income.json"),
-      bronzeJson.mkString("\n").getBytes)
+    Files.write(java.nio.file.Paths.get(dir, "income.json"), lines.mkString("\n").getBytes)
     dir
   }
+
+  private def writeBronze(): String = writeBatch(bronzeJson)
 
   test("full pipeline: bronze -> state table with golden Tesla row; invalid rows quarantined") {
     val bronzeDir = writeBronze()
@@ -130,6 +132,78 @@ class PipelineSpec extends SparkSpec {
     val a = viaSource.collect().map(_.toSeq).toSet
     val b = viaFiles.collect().map(_.toSeq).toSet
     assert(a == b && a.size == 3, "source node must be the only difference")
+  }
+
+  // Second batch over writeBronze()'s state: in-batch duplicates (TSLA Q2
+  // twice with different revenue, RIVN Q2 twice identical), restatements
+  // of stored keys (TSLA Q2, RIVN Q2, TSLA Q1 with a null eps) and new
+  // keys (TSLA Q3, LCID Q1).
+  private val restateJson = Seq(
+    """{"date": "2025-06-30", "symbol": "TSLA", "revenue": 22600000000, "eps": 0.41, "grossProfit": 5000000000}""",
+    """{"date": "2025-06-30", "symbol": "TSLA", "revenue": 22400000000, "eps": 0.42, "grossProfit": 5100000000}""",
+    """{"date": "2025-06-30", "symbol": "RIVN", "revenue": 1400000000, "eps": -0.45, "grossProfit": 250000000}""",
+    """{"date": "2025-06-30", "symbol": "RIVN", "revenue": 1400000000, "eps": -0.45, "grossProfit": 250000000}""",
+    """{"date": "2025-03-31", "symbol": "TSLA", "revenue": 19000000000, "grossProfit": 4000000000}""",
+    """{"date": "2025-09-30", "symbol": "TSLA", "revenue": 25000000000, "eps": 0.50, "grossProfit": 5500000000}""",
+    """{"date": "2025-03-31", "symbol": "LCID", "revenue": 700000000, "eps": -0.25, "grossProfit": 90000000}""")
+
+  test("the one-window merge equals the two-step dedup-then-upsert merge") {
+    import graft.ops.{Merge, Quality}
+    val statePath = Files.createTempDirectory("graft_fused").toString + "/financials"
+    Pipeline.run(spark, writeBronze(), statePath)
+    val batchDir = writeBatch(restateJson)
+    val keys = Seq("ticker", "quarter_date")
+    val (clean, _) = Quality.quarantine(Pipeline.normalizeIncome(
+      spark.read.schema(Schemas.fmpIncome).json(batchDir)), Pipeline.validRow)
+    val twoStep = Merge.mergeUpsert(spark.read.parquet(statePath),
+      Merge.lastWriteWins(clean, keys, Pipeline.IncomePrecedence), keys)
+      .collect().map(_.toSeq).toSet
+    val (fused, _) = Pipeline.run(spark, batchDir, statePath)
+    val got = fused.collect().map(_.toSeq).toSet
+    assert(got == twoStep)
+    assert(got.size == 5) // TSLA Q1-Q3, RIVN Q2, LCID Q1
+    // The batch's best TSLA Q2 row (highest revenue, eps 0.41) replaced
+    // the stored one (eps 0.40).
+    val tslaQ2 = got.filter(r => r.head == "TSLA" && r(2) == "2025-Q2").toSeq
+    assert(tslaQ2.size == 1 &&
+      tslaQ2.head(4).asInstanceOf[java.math.BigDecimal].compareTo(new java.math.BigDecimal("0.41")) == 0,
+      tslaQ2)
+  }
+
+  test("the income merge writes through exactly one hash exchange") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    val statePath = Files.createTempDirectory("graft_onex").toString + "/financials"
+    Pipeline.run(spark, writeBronze(), statePath)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Pipeline.run(spark, writeBatch(restateJson), statePath)
+      // Listener delivery is async: poll for the state write's plan.
+      def writes(): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+        import scala.jdk.CollectionConverters._
+        plans.iterator().asScala.toSeq.filter(p =>
+          collectWithSubqueries(p) { case w: DataWritingCommandExec => w.toString }
+            .exists(_.contains("financials_tmp")))
+      }
+      val deadline = System.nanoTime() + 15000000000L
+      while (System.nanoTime() < deadline && writes().isEmpty) Thread.sleep(100)
+      val w = writes()
+      assert(w.size == 1, s"expected one state write, captured ${w.size}")
+      val hashExchanges = collectWithSubqueries(w.head) {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+      }
+      assert(hashExchanges.size == 1, w.head.toString)
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("runEstimates: estimates flow merges into its own state table") {

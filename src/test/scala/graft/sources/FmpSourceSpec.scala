@@ -39,6 +39,7 @@ class FmpSourceSpec extends SparkSpec {
   }
 
   test("symbol predicates prune partitions; other filters stay residual") {
+    val slots = spark.sparkContext.defaultParallelism // also makes the session active
     val b = new FmpScanBuilder(Schemas.fmpIncome,
       Map("root" -> "/tmp/x", "endpoint" -> "e", "symbols" -> "AAA,BBB,CCC"))
     val residual = b.pushFilters(Array(
@@ -46,7 +47,36 @@ class FmpSourceSpec extends SparkSpec {
       IsNotNull("revenue")))
     assert(residual.toSeq == Seq(IsNotNull("revenue"))) // symbol filters consumed
     val parts = b.build().asInstanceOf[FmpScan].planInputPartitions()
-    assert(parts.map(_.asInstanceOf[FmpPartition].symbol).toSeq == Seq("BBB"))
+      .map(_.asInstanceOf[FmpPartition])
+    assert(parts.flatMap(_.symbols).toSeq == Seq("BBB"))
+    assert(parts.length <= slots && parts.forall(_.symbols.nonEmpty), parts.toSeq)
+  }
+
+  test("HTTP transport: symbols pack into at most leaf-parallelism partitions, in order") {
+    val root = stage()
+    val symbols = Seq("AAA", "BBB") ++ (2 until 10).map(i => f"S$i%02d")
+    val kept = symbols.filterNot(Set("S03", "S07"))
+    val server = new LoopbackApiServer(root, failFirst = true)
+    spark.conf.set("spark.sql.leafNodeDefaultParallelism", "3")
+    try {
+      val df = spark.read.format("graft.sources.FmpSource")
+        .option("url", server.url).option("endpoint", "income-statement")
+        .option("symbols", symbols.mkString(",")).option("dataset", "income").load()
+        .where(col("symbol").isin(kept: _*))
+      val parts = df.queryExecution.executedPlan.collect {
+        case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s
+      }.head.inputPartitions.map(_.asInstanceOf[FmpPartition])
+      assert(parts.length <= 3 && parts.forall(_.symbols.nonEmpty), parts)
+      assert(parts.flatMap(_.symbols) == kept, "contiguous groups in symbol order")
+      assert(df.count() == 3) // AAA's two staged rows and BBB's one
+      // Each fetched symbol: the injected first-attempt 500, then the
+      // retry. Pruned symbols are never requested.
+      kept.foreach(s => assert(server.hitCount(s"/income-statement/$s") == 2, s))
+      Seq("S03", "S07").foreach(s => assert(server.hitCount(s"/income-statement/$s") == 0, s))
+    } finally {
+      spark.conf.unset("spark.sql.leafNodeDefaultParallelism")
+      server.stop()
+    }
   }
 
   test("a symbol with no staged directory is an empty response") {

@@ -27,6 +27,27 @@ class CacheScopeSpec extends SparkSpec {
       "close() should release the tracked checkpoint blocks")
   }
 
+  test("scope.truncate never claims an outer cache that first materializes inside the cut") {
+    val ids = () => spark.sparkContext.getPersistentRDDs.keySet
+    val outer = spark.range(500).select(col("id"), (col("id") % 3).as("m")).persist()
+    try {
+      val before = ids()
+      val scope = new CacheScope
+      // The cut's job is the first action over `outer`: its cache blocks
+      // appear in getPersistentRDDs during truncate, next to the cut's own.
+      val cut = scope.truncate(outer.where(col("m") === 0))
+      val during = ids() -- before
+      assert(during.size == 2, s"expected the outer cache and the cut, got $during")
+      assert(cut.count() == 167)
+      scope.close()
+      val after = ids() -- before
+      assert(after.size == 1 && after.subsetOf(during),
+        s"close() must release only the cut; still persisted: $after of $during")
+      assert(outer.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+      assert(outer.count() == 500)
+    } finally { outer.unpersist(); () }
+  }
+
   test("scope.truncate cuts the plan to a scan of the materialized blocks") {
     val scope = new CacheScope
     try {
